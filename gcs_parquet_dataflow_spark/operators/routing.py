@@ -77,6 +77,27 @@ def route_uris(
     return routed, unmatched
 
 
+def files_by_config(
+    df: DataFrame,
+    configs: list[SourceConfig],
+    uri_col: str = "uri",
+    parquet_only: bool = True,
+) -> tuple[dict[str, list[str]], DataFrame]:
+    """Route a DataFrame of file URIs and collect the routed FILE LIST
+    (tiny — names, never row data) per config → ({config_id: [uri, ...]},
+    unmatched). The one driver-side file list both the batch planner
+    and the notification stream read per config from."""
+    # route_uris is looked up as this module's global on each call, so a
+    # wrapper set on the module attribute (perfbench's traced run) sees it
+    routed, unmatched = route_uris(
+        df, configs, uri_col=uri_col, parquet_only=parquet_only
+    )
+    by_config: dict[str, list[str]] = {}
+    for r in routed.select(uri_col, "config_id").collect():
+        by_config.setdefault(r["config_id"], []).append(r[uri_col])
+    return by_config, unmatched
+
+
 def configs_df(df_or_spark, configs: list[SourceConfig]) -> DataFrame:
     """Routing table as a (broadcastable) DataFrame for the join strategy."""
     spark = df_or_spark if not isinstance(df_or_spark, DataFrame) else df_or_spark.sparkSession

@@ -564,6 +564,9 @@ def run_recipe_stream(
     starts: a recipe with corpus-level stages fails fast, pointing at
     the index-backed streaming dedup entry point instead."""
     from gcs_parquet_dataflow_spark.sinks.parquet_lake import write_partitioned
+    from gcs_parquet_dataflow_spark.streaming.pipeline import (
+        _start_foreach_batch,
+    )
 
     validate_streamable(recipe)
 
@@ -572,12 +575,6 @@ def run_recipe_stream(
         write_partitioned(out, out_path, [], batch_id=batch_id,
                           coalesce_files=1)
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_foreach_batch(
+        docs_stream, handle, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

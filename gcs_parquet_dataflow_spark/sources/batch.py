@@ -22,11 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcs_parquet_dataflow_spark.config.model import SourceConfig
-from gcs_parquet_dataflow_spark.operators.routing import route_uris
+from gcs_parquet_dataflow_spark.operators.routing import files_by_config
 from gcs_parquet_dataflow_spark.plans.compiler import (
     CompilerOptions,
     CompiledTransform,
     compile_config,
+    split_dlq,
 )
 
 URI_COL = "_uri"
@@ -113,14 +114,9 @@ def plan_batch(
     inline expression and the "join" of files to configs happens on the
     driver over the file *list* (tiny), never over row data.
     """
-    uris = list_files(spark, pattern)
-    routed, unmatched = route_uris(
-        uris, configs, uri_col="uri", parquet_only=parquet_only
+    by_config, unmatched = files_by_config(
+        list_files(spark, pattern), configs, parquet_only=parquet_only
     )
-    pairs = routed.select("uri", "config_id").collect()  # file list: small
-    by_config: dict[str, list[str]] = {}
-    for r in pairs:
-        by_config.setdefault(r["config_id"], []).append(r["uri"])
     cfg_by_id = {c.config_id: c for c in configs}
     batches = []
     for config_id, files in by_config.items():
@@ -153,8 +149,7 @@ def run_batch(
     all_events = events_parts[0]
     for p in events_parts[1:]:
         all_events = all_events.unionByName(p)
-    ok = all_events.filter(F.col("_error").isNull()).select("event_json")
-    dlq = all_events.filter(F.col("_error").isNotNull())
+    ok, dlq = split_dlq(all_events)
     return ok, dlq, unmatched
 
 

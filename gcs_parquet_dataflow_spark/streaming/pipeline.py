@@ -18,6 +18,7 @@ Pub/Sub-Lite) where re-delivery is possible.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,10 +27,11 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from gcs_parquet_dataflow_spark.config.model import SourceConfig
-from gcs_parquet_dataflow_spark.operators.routing import route_uris
+from gcs_parquet_dataflow_spark.operators.routing import files_by_config
 from gcs_parquet_dataflow_spark.plans.compiler import (
     CompilerOptions,
     compile_config,
+    split_dlq,
 )
 from gcs_parquet_dataflow_spark.sinks.http_batch import (
     HttpSinkConfig,
@@ -165,21 +167,81 @@ def join_streams(
     return l.join(r, cond, how).drop(r[key])
 
 
+def _start_foreach_batch(
+    df: DataFrame,
+    handle: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    trigger_seconds: int,
+    available_now: bool,
+    output_mode: str | None = None,
+) -> StreamingQuery:
+    """The one stream start-up every runner here shares: ``handle`` runs
+    per micro-batch (foreachBatch) under ``checkpoint_dir``, either as a
+    one-shot drain (``available_now``) or on a processing-time trigger
+    every ``trigger_seconds``."""
+    writer = df.writeStream.foreachBatch(handle).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if output_mode is not None:
+        writer = writer.outputMode(output_mode)
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
+
+
+def _deliver(
+    serialized: DataFrame,
+    dlq_base: str | None,
+    batch_id: int,
+    sink: Callable[[DataFrame, int], None] | None,
+    http_cfg: HttpSinkConfig | None,
+) -> None:
+    """One micro-batch's delivery step (reference main.py:494-523):
+    split the transformed rows on ``_error``, write the transform DLQ
+    under ``{dlq_base}/batch_id=N``, hand the ok events to ``sink`` (test
+    hook) or the HTTP batch sink, and write the HTTP delivery failures
+    under ``{dlq_base}/api_batch_id=N``. Both DLQ writes overwrite their
+    batch-id-keyed path, so a replayed batch is idempotent (SURVEY §7
+    hard part 6)."""
+    serialized = serialized.persist()
+    try:
+        ok, dlq = split_dlq(serialized)
+        if dlq_base is not None:
+            (
+                dlq.select(
+                    "event_json",
+                    F.col("_error.error_type").alias("error_type"),
+                    F.col("_error.reason").alias("reason"),
+                )
+                .write.mode("overwrite")
+                .parquet(f"{dlq_base}/batch_id={batch_id}")
+            )
+        if sink is not None:
+            sink(ok, batch_id)
+        elif http_cfg is not None:
+            failed = post_events(ok, http_cfg).filter(F.col("status") == "dlq")
+            if dlq_base is not None:
+                failed.write.mode("overwrite").parquet(
+                    f"{dlq_base}/api_batch_id={batch_id}"
+                )
+            else:
+                failed.count()  # the action that runs the posts
+    finally:
+        serialized.unpersist()
+
+
 def stream_source(
     spark: SparkSession,
     config: SourceConfig,
     schema: T.StructType,
     path: str | None = None,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming parquet file source for one config's prefix (replaces
     reference S1+E1+E2+W1+D1+S4, SURVEY §2.1). ``path`` overrides the
-    config prefix for local testing. ``maxFilesPerTrigger`` bounds
-    micro-batch size — the scale knob for backfill-sized arrival bursts."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path or config.source_gcs_prefix)
+    config prefix for local testing."""
+    return spark.readStream.schema(schema).parquet(
+        path or config.source_gcs_prefix
+    )
 
 
 def run_streaming(
@@ -200,54 +262,20 @@ def run_streaming(
 
     Per micro-batch (``foreachBatch`` = the natural bundle boundary the
     reference emulates with finish_bundle re-windowing, main.py:415-423):
-    transform → split DLQ → write DLQ idempotently (batch-id-keyed path,
-    SURVEY §7 hard part 6) → deliver events via ``sink`` (test hook) or
-    the HTTP batch sink.
+    transform → ``_deliver`` (DLQ split, transform DLQ under
+    ``{dlq_dir}/batch_id=N``, events to ``sink`` or the HTTP batch sink,
+    delivery DLQ under ``{dlq_dir}/api_batch_id=N``).
     """
     compiled = compile_config(config, schema, opts)
-    source = stream_source(spark, config, schema, path)
-    serialized = compiled.serialize(source)
+    serialized = compiled.serialize(stream_source(spark, config, schema, path))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            ok = batch_df.filter(F.col("_error").isNull()).select("event_json")
-            dlq = batch_df.filter(F.col("_error").isNotNull())
-            if dlq_dir is not None:
-                # idempotent on retry: one subdir per batch id, overwritten
-                (
-                    dlq.select(
-                        "event_json",
-                        F.col("_error.error_type").alias("error_type"),
-                        F.col("_error.reason").alias("reason"),
-                    )
-                    .write.mode("overwrite")
-                    .parquet(f"{dlq_dir}/batch_id={batch_id}")
-                )
-            if sink is not None:
-                sink(ok, batch_id)
-            elif http_cfg is not None:
-                outcomes = post_events(ok, http_cfg)
-                if dlq_dir is not None:
-                    (
-                        outcomes.filter(F.col("status") == "dlq")
-                        .write.mode("overwrite")
-                        .parquet(f"{dlq_dir}/api_batch_id={batch_id}")
-                    )
-                else:
-                    outcomes.filter(F.col("status") == "dlq").count()
-        finally:
-            batch_df.unpersist()
+        _deliver(batch_df, dlq_dir, batch_id, sink, http_cfg)
 
-    writer = (
-        serialized.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_foreach_batch(
+        serialized, process_batch, checkpoint_dir, trigger_seconds,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_notification_stream(
@@ -283,8 +311,10 @@ def run_notification_stream(
     Per micro-batch the routed notification rows are collected — FILE
     NAMES, not data (the same driver-side file list ``plan_batch``
     holds); each config's files are then read cluster-side with that
-    config's schema and its ONCE-compiled transform. ``sink`` receives
-    (config_id, ok_events_df, batch_id).
+    config's schema and its ONCE-compiled transform, and delivered by
+    ``_deliver`` with the DLQs under ``{dlq_dir}/{config_id}/``
+    (``batch_id=N`` transform failures, ``api_batch_id=N`` delivery
+    failures). ``sink`` receives (config_id, ok_events_df, batch_id).
     """
     opts = opts or CompilerOptions()
     compiled = {
@@ -295,49 +325,23 @@ def run_notification_stream(
     deduped = dedup_within_watermark(notifications, [uri_col], ts_col, horizon)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed, _unmatched = route_uris(batch_df, configs, uri_col=uri_col)
-        rows = routed.select(uri_col, "config_id").collect()  # file list only
-        by_config: dict[str, list[str]] = {}
-        for r in rows:
-            by_config.setdefault(r["config_id"], []).append(r[uri_col])
+        by_config, _unmatched = files_by_config(batch_df, configs, uri_col)
         for config_id, uris in sorted(by_config.items()):
             plan = compiled.get(config_id)
             if plan is None:
                 continue
             data = spark.read.schema(schemas[config_id]).parquet(*uris)
-            serialized = plan.serialize(data).persist()
-            try:
-                ok = serialized.filter(F.col("_error").isNull()).select(
-                    "event_json"
-                )
-                dlq = serialized.filter(F.col("_error").isNotNull())
-                if dlq_dir is not None:
-                    (
-                        dlq.select(
-                            "event_json",
-                            F.col("_error.error_type").alias("error_type"),
-                            F.col("_error.reason").alias("reason"),
-                        )
-                        .write.mode("overwrite")
-                        .parquet(f"{dlq_dir}/{config_id}/batch_id={batch_id}")
-                    )
-                if sink is not None:
-                    sink(config_id, ok, batch_id)
-                elif http_cfg is not None:
-                    outcomes = post_events(ok, http_cfg)
-                    outcomes.filter(F.col("status") == "dlq").count()
-            finally:
-                serialized.unpersist()
+            _deliver(
+                plan.serialize(data),
+                None if dlq_dir is None else f"{dlq_dir}/{config_id}",
+                batch_id,
+                None if sink is None else partial(sink, config_id),
+                http_cfg,
+            )
 
-    writer = (
-        deduped.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_foreach_batch(
+        deduped, process_batch, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_corpus_ingest_stream(
@@ -407,16 +411,10 @@ def run_corpus_ingest_stream(
         write_partitioned(survivors, out_path, [], batch_id=batch_id)
         release_intermediates()
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_foreach_batch(
+        docs_stream, process_batch, checkpoint_dir, trigger_seconds,
+        available_now, output_mode="update",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_upsert_stream(
@@ -518,16 +516,10 @@ def run_upsert_stream(
         else:
             latest.write.mode("overwrite").parquet(lake_path)
 
-    writer = (
-        updates.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start_foreach_batch(
+        updates, process_batch, checkpoint_dir, trigger_seconds,
+        available_now, output_mode="update",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_drift_monitor_stream(
@@ -631,14 +623,10 @@ def run_drift_monitor_stream(
         write_partitioned(psi, out_path, [], batch_id=batch_id)
         release_intermediates()
 
-    writer = events_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    query = _start_foreach_batch(
+        events_stream, process_batch, checkpoint_dir, trigger_seconds,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    query = writer.start()
     _register_stream_pins(spark, query, [base_df])
     return query
 
@@ -701,14 +689,10 @@ def run_quality_gate_stream(
         write_partitioned(report, report_path, [], batch_id=batch_id)
         release_intermediates()
 
-    writer = rows_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        rows_stream, process_batch, checkpoint_dir, trigger_seconds,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_heavy_hitter_stream(
@@ -806,15 +790,9 @@ def run_heavy_hitter_stream(
                           coalesce_files=1)
         release_intermediates()
 
-    writer = (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_foreach_batch(
+        events_stream, handle, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_aqp_stream(
@@ -920,15 +898,9 @@ def run_aqp_stream(
                           coalesce_files=1)
         release_intermediates()
 
-    writer = (
-        rows_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_foreach_batch(
+        rows_stream, handle, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_ann_ingest_stream(
@@ -985,15 +957,9 @@ def run_ann_ingest_stream(
             coalesce_files=1,
         )
 
-    writer = (
-        vec_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_foreach_batch(
+        vec_stream, handle, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_decontamination_stream(
@@ -1049,15 +1015,9 @@ def run_decontamination_stream(
                           coalesce_files=1)
         release_intermediates()
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    query = _start_foreach_batch(
+        docs_stream, handle, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    query = writer.start()
     _register_stream_pins(spark, query, [bench_df])
     return query
 
@@ -1152,14 +1112,9 @@ def run_classifier_filter_stream(
         )
         release_intermediates()
 
-    writer = docs_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        docs_stream, handle, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def _prune_batch_partitions(
@@ -1286,15 +1241,9 @@ def run_rtbf_stream(
         # safe; a crash here just rewrites an identical audit)
         fs.create(marker, True).close()
 
-    writer = (
-        requests_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_foreach_batch(
+        requests_stream, handle, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def compact_batch_shards(
@@ -1828,15 +1777,9 @@ def run_incremental_er_stream(
             write_guard_reports(spark, ops_path, batch_id=batch_id)
         release_intermediates()
 
-    writer = (
-        records_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_foreach_batch(
+        records_stream, handle, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_embedding_dedup_stream(
@@ -1987,12 +1930,6 @@ def run_embedding_dedup_stream(
             write_guard_reports(spark, ops_path, batch_id=batch_id)
         release_intermediates()
 
-    writer = (
-        vec_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_foreach_batch(
+        vec_stream, handle, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

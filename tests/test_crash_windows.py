@@ -247,10 +247,47 @@ FAMILIES = {
 STATES = ["torn", "staged", "committed", "flat_gone", "legacy_deleted"]
 
 
+@pytest.fixture(scope="module")
+def prepared(spark, tmp_path_factory):
+    """Per family, the set-up lake, its content and the completed op run
+    on a clone of it, built once for the module and shared by every
+    crash state and the lease test of that family: ``prepared(family)``
+    → (root, pre, post, clone). ``root/lake`` (plus any sibling the
+    setup wrote next to it) stays as the setup left it; each test
+    copies it with ``_fresh_lake`` and only reads ``clone``."""
+    cache = {}
+
+    def get(family):
+        if family not in cache:
+            _suffix, setup, op, content = FAMILIES[family]
+            root = tmp_path_factory.mktemp(f"prepared_{family}")
+            base = str(root / "lake")
+            setup(spark, base)
+            pre = content(spark, base)
+            clone = str(root / "clone")
+            shutil.copytree(base, clone)
+            op(spark, clone)
+            cache[family] = (root, pre, content(spark, clone), clone)
+        return cache[family]
+
+    return get
+
+
+def _fresh_lake(root, dest_dir):
+    """Copy the setup's lake and its siblings from ``root`` into
+    ``dest_dir`` → the lake's path there."""
+    for entry in os.listdir(root):
+        if entry.startswith("lake"):
+            shutil.copytree(os.path.join(root, entry), dest_dir / entry)
+    return str(dest_dir / "lake")
+
+
 @pytest.mark.parametrize("state", STATES)
 @pytest.mark.parametrize("family", sorted(FAMILIES))
-def test_staged_swap_crash_state_converges(spark, tmp_path, family, state):
-    suffix, setup, op, content = FAMILIES[family]
+def test_staged_swap_crash_state_converges(
+    spark, tmp_path, prepared, family, state
+):
+    suffix, _setup, op, content = FAMILIES[family]
     if family == "cosine_index" and state == "legacy_deleted":
         # the pre-r12 cosine staging was the MONOLITHIC relabeled index
         # — not constructible from the generational op's kept-only
@@ -263,17 +300,12 @@ def test_staged_swap_crash_state_converges(spark, tmp_path, family, state):
         # exist for it (recover_staged_swap intentionally doesn't
         # know the suffix)
         pytest.skip("no legacy window: rewrite_table postdates r12")
-    base = str(tmp_path / "lake")
-    setup(spark, base)
-    pre = content(spark, base)
+    root, pre, post, clone = prepared(family)
+    base = _fresh_lake(root, tmp_path)
 
-    # post content + exact staging payload, from a clone run — under
+    # post content + exact staging payload, from the clone run — under
     # the versioned commit the clone's result lives in its resolved
     # version dir, not the (retained, stale) flat clone dir
-    clone = str(tmp_path / "clone")
-    shutil.copytree(base, clone)
-    op(spark, clone)
-    post = content(spark, clone)
     payload = PL.resolve_table(spark, clone)
     clone_folded = clone + "__folded"
 
@@ -329,7 +361,9 @@ def test_staged_swap_crash_state_converges(spark, tmp_path, family, state):
 
 
 @pytest.mark.parametrize("family", sorted(FAMILIES))
-def test_held_lease_blocks_maintenance_until_broken(spark, tmp_path, family):
+def test_held_lease_blocks_maintenance_until_broken(
+    spark, tmp_path, prepared, family
+):
     """Single-writer mutual exclusion (VERDICT r10 item 2): a held
     ``__swap_lease`` — another maintenance job mid-run, or a holder
     that crashed BEFORE its delete→rename (dest intact, so
@@ -337,15 +371,9 @@ def test_held_lease_blocks_maintenance_until_broken(spark, tmp_path, family):
     op raise ConcurrentWriterError holding nothing; break_swap_lease
     is the documented operator unblock, after which the op converges
     to post exactly as the crash sweep requires."""
-    suffix, setup, op, content = FAMILIES[family]
-    base = str(tmp_path / "lake")
-    setup(spark, base)
-    pre = content(spark, base)
-
-    clone = str(tmp_path / "clone")
-    shutil.copytree(base, clone)
-    op(spark, clone)
-    post = content(spark, clone)
+    suffix, _setup, op, content = FAMILIES[family]
+    root, pre, post, _clone = prepared(family)
+    base = _fresh_lake(root, tmp_path)
 
     with open(base + "__swap_lease", "w") as f:
         f.write('{"op": "other", "pid": 1, "acquired_unix_ms": 0}')

@@ -310,12 +310,16 @@ def test_sessionize_stream_merges_and_splits(spark, tmp_path):
     assert (2, "2024-01-01 00:05:00", 1) in got
 
 
-def test_streaming_http_path_writes_api_dlq(spark, tmp_path):
-    """run_streaming's HTTP branch end-to-end with an unreachable sink:
-    delivery failures exhaust retries and land in the api DLQ lake —
-    delivery failure is DATA, not a lost side effect."""
+@pytest.mark.parametrize("runner", ["run_streaming", "run_notification_stream"])
+def test_streaming_http_path_writes_api_dlq(spark, tmp_path, runner):
+    """Both streaming runners' HTTP branch end-to-end with an unreachable
+    sink: delivery failures exhaust retries and land in the api DLQ lake
+    (per config for the notification stream) — delivery failure is
+    DATA, not a lost side effect."""
     from gcs_parquet_dataflow_spark.sinks.http_batch import HttpSinkConfig
-    from gcs_parquet_dataflow_spark.streaming.pipeline import run_streaming
+    from gcs_parquet_dataflow_spark.streaming.pipeline import (
+        run_notification_stream,
+    )
 
     src = tmp_path / "in"
     src.mkdir()
@@ -329,18 +333,77 @@ def test_streaming_http_path_writes_api_dlq(spark, tmp_path):
         timeout_s=2,
     )
     dlq_dir = tmp_path / "dlq"
+    ckpt = str(tmp_path / "ckpt")
     opts = CompilerOptions(now_epoch=F.lit(1700000000), uuid=F.lit("u"))
-    q = run_streaming(
-        spark, CONFIG, SCHEMA, str(tmp_path / "ckpt"), path=str(src),
-        opts=opts, http_cfg=http_cfg, dlq_dir=str(dlq_dir),
-        available_now=True,
-    )
+    if runner == "run_streaming":
+        q = run_streaming(
+            spark, CONFIG, SCHEMA, ckpt, path=str(src), opts=opts,
+            http_cfg=http_cfg, dlq_dir=str(dlq_dir), available_now=True,
+        )
+        api_dir = dlq_dir / "api_batch_id=0"
+    else:
+        notif = tmp_path / "notif"
+        spark.createDataFrame(
+            [(str(src), "2024-01-01 00:00:00")], "uri string, ts string"
+        ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(
+            1
+        ).write.parquet(str(notif))
+        config = load_configs([{
+            "config_id": "s", "source_gcs_prefix": str(src),
+            "mixpanel_event_name_from_field": "event_name",
+            "field_mappings": [
+                {"source_field": "user_id", "mixpanel_field": "$user_id",
+                 "type": "string"}],
+        }])
+        notifications = spark.readStream.schema(
+            "uri string, ts timestamp"
+        ).parquet(str(notif))
+        q = run_notification_stream(
+            spark, config, {"s": SCHEMA}, notifications, ckpt, opts=opts,
+            http_cfg=http_cfg, dlq_dir=str(dlq_dir), available_now=True,
+        )
+        api_dir = dlq_dir / "s" / "api_batch_id=0"
     q.awaitTermination(120)
-    api_dlq = spark.read.parquet(str(dlq_dir / "api_batch_id=0"))
-    rows = api_dlq.collect()
+    assert q.exception() is None
+    rows = spark.read.parquet(str(api_dir)).collect()
     assert len(rows) == 2
     assert all(r["status"] == "dlq" for r in rows)
     assert all("retries_exhausted" in r["detail"] for r in rows)
+
+
+@pytest.mark.fast
+def test_every_write_stream_goes_through_the_one_start_up():
+    """Guard: the only ``.writeStream`` in the package is the one in
+    streaming/pipeline.py's ``_start_foreach_batch`` — every runner
+    starts its query through that helper, so the foreachBatch →
+    checkpoint → trigger scaffold cannot fork again."""
+    import ast
+    import pathlib
+
+    import gcs_parquet_dataflow_spark
+
+    root = pathlib.Path(gcs_parquet_dataflow_spark.__file__).parent
+    sites = []  # (module, innermost enclosing function, line)
+
+    def visit(node, module, fn_name):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Attribute) and child.attr == "writeStream":
+                sites.append((module, fn_name, child.lineno))
+            is_fn = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, module, child.name if is_fn else fn_name)
+
+    for path in sorted(root.rglob("*.py")):
+        module = path.relative_to(root).as_posix()
+        visit(ast.parse(path.read_text(), filename=str(path)), module, None)
+    outside = [s for s in sites if s[:2] != (
+        "streaming/pipeline.py", "_start_foreach_batch"
+    )]
+    assert not outside, (
+        f".writeStream outside _start_foreach_batch: {outside} — start "
+        "the query through streaming.pipeline._start_foreach_batch"
+    )
+    # the helper itself still holds the one site (the guard cannot rot)
+    assert len(sites) == 1, sites
 
 
 def test_join_streams_time_range(spark, tmp_path):

@@ -57,24 +57,25 @@ def route_uris(
     configs: list[SourceConfig],
     uri_col: str = "uri",
     parquet_only: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """→ (routed, unmatched).
+) -> DataFrame:
+    """``df`` with ``config_id`` attached, NULL where no config matches.
 
-    ``routed`` carries ``config_id``; ``parquet_only`` reproduces the
-    streaming pipeline's FilterParquet (main.py:475-479: routed config's
-    file_type must be PARQUET, case-insensitive). ``unmatched`` is the
-    NULL side — the reference only counts these (``unmatched_uri``
-    counter, main.py:60-63); callers can count or DLQ it.
+    The NULL rows stay, so one action reads both the routed and the
+    unmatched URIs; the reference only counts the unmatched ones
+    (``unmatched_uri`` counter, main.py:60-63). ``parquet_only``
+    reproduces the streaming pipeline's FilterParquet (main.py:475-479):
+    rows routed to a config whose file_type is not PARQUET
+    (case-insensitive) are dropped.
     """
-    routed_all = with_routing(df, configs, uri_col)
-    unmatched = routed_all.filter(F.col("config_id").isNull()).drop("config_id")
-    routed = routed_all.filter(F.col("config_id").isNotNull())
+    routed = with_routing(df, configs, uri_col)
     if parquet_only:
         parquet_ids = [
             c.config_id for c in configs if c.file_type.upper() == "PARQUET"
         ]
-        routed = routed.filter(F.col("config_id").isin(parquet_ids))
-    return routed, unmatched
+        routed = routed.filter(
+            F.col("config_id").isNull() | F.col("config_id").isin(parquet_ids)
+        )
+    return routed
 
 
 def files_by_config(
@@ -82,19 +83,21 @@ def files_by_config(
     configs: list[SourceConfig],
     uri_col: str = "uri",
     parquet_only: bool = True,
-) -> tuple[dict[str, list[str]], DataFrame]:
-    """Route a DataFrame of file URIs and collect the routed FILE LIST
-    (tiny — names, never row data) per config → ({config_id: [uri, ...]},
-    unmatched). The one driver-side file list both the batch planner
-    and the notification stream read per config from."""
+) -> tuple[dict[str, list[str]], list[str]]:
+    """Route a DataFrame of file URIs and collect the FILE LIST (tiny —
+    names, never row data) in one action → ({config_id: [uri, ...]},
+    unmatched uris). The one driver-side file list both the batch
+    planner and the notification stream read per config from."""
     # route_uris is looked up as this module's global on each call, so a
     # wrapper set on the module attribute (perfbench's traced run) sees it
-    routed, unmatched = route_uris(
-        df, configs, uri_col=uri_col, parquet_only=parquet_only
-    )
+    routed = route_uris(df, configs, uri_col=uri_col, parquet_only=parquet_only)
     by_config: dict[str, list[str]] = {}
+    unmatched: list[str] = []
     for r in routed.select(uri_col, "config_id").collect():
-        by_config.setdefault(r["config_id"], []).append(r[uri_col])
+        if r["config_id"] is None:
+            unmatched.append(r[uri_col])
+        else:
+            by_config.setdefault(r["config_id"], []).append(r[uri_col])
     return by_config, unmatched
 
 

@@ -125,7 +125,10 @@ def plan_batch(
         schema_wo_lineage = df.drop(URI_COL).schema
         compiled = compile_config(config, schema_wo_lineage, opts)
         batches.append(RoutedBatch(config, files, df, compiled))
-    return batches, unmatched
+    # built from the names the routing collect already holds
+    return batches, spark.createDataFrame(
+        [(u,) for u in unmatched], "uri string"
+    )
 
 
 def run_batch(

@@ -18,9 +18,13 @@ Pub/Sub-Lite) where re-delivery is possible.
 
 from __future__ import annotations
 
+import logging
+import math
+from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,6 +44,9 @@ from gcs_parquet_dataflow_spark.sinks.http_batch import (
 
 DEFAULT_TRIGGER_S = 10  # reference's 10 s API-batching window (main.py:506)
 DEFAULT_DEDUP_HORIZON = "5 minutes"  # reference's dedup window (main.py:462)
+UNMATCHED_SAMPLE = 3  # unmatched URIs named in a batch's warning
+
+log = logging.getLogger(__name__)
 
 
 # ---------------------------------------------------------------------------
@@ -195,14 +202,16 @@ def _deliver(
     batch_id: int,
     sink: Callable[[DataFrame, int], None] | None,
     http_cfg: HttpSinkConfig | None,
+    config_id: str | None = None,
 ) -> None:
     """One micro-batch's delivery step (reference main.py:494-523):
     split the transformed rows on ``_error``, write the transform DLQ
     under ``{dlq_base}/batch_id=N``, hand the ok events to ``sink`` (test
     hook) or the HTTP batch sink, and write the HTTP delivery failures
-    under ``{dlq_base}/api_batch_id=N``. Both DLQ writes overwrite their
+    under ``{dlq_base}/api_batch_id=N`` — or, with no ``dlq_base``, log
+    their count as a WARNING. Both DLQ writes overwrite their
     batch-id-keyed path, so a replayed batch is idempotent (SURVEY §7
-    hard part 6)."""
+    hard part 6). The transform DLQ commits before any event is posted."""
     serialized = serialized.persist()
     try:
         ok, dlq = split_dlq(serialized)
@@ -225,9 +234,41 @@ def _deliver(
                     f"{dlq_base}/api_batch_id={batch_id}"
                 )
             else:
-                failed.count()  # the action that runs the posts
+                n_failed = failed.count()  # the action that runs the posts
+                if n_failed:
+                    log.warning(
+                        "stream batch %d%s: %d event(s) failed HTTP delivery "
+                        "and were dropped (no dlq_dir set)",
+                        batch_id,
+                        "" if config_id is None else f" config {config_id}",
+                        n_failed,
+                    )
     finally:
         serialized.unpersist()
+
+
+def _scan_partitions(df: DataFrame) -> int:
+    """``ceil(scan bytes / maxPartitionBytes)`` for ``df`` (a file read):
+    Spark's own split target, without its spread of small scans over
+    every core. Both figures are read on the driver from the optimized
+    plan and the session conf; no job runs."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    cap = (
+        df.sparkSession._jsparkSession.sessionState().conf()
+        .filesMaxPartitionBytes()
+    )
+    return max(1, math.ceil(int(size) / cap))
+
+
+def _in_job_group(spark: SparkSession, fn: Callable) -> Callable:
+    """``fn`` carrying the calling thread's job group and tags (a
+    stream's runId) into whichever thread runs it, as its own copy of
+    those properties, which Spark mutates per SQL execution. With pinned
+    threads off (``PYSPARK_PIN_THREAD=false``) PySpark keeps no
+    per-thread properties and ``inheritable_thread_target`` returns the
+    session; ``fn`` then runs as it is."""
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)
 
 
 def stream_source(
@@ -310,11 +351,25 @@ def run_notification_stream(
 
     Per micro-batch the routed notification rows are collected — FILE
     NAMES, not data (the same driver-side file list ``plan_batch``
-    holds); each config's files are then read cluster-side with that
-    config's schema and its ONCE-compiled transform, and delivered by
-    ``_deliver`` with the DLQs under ``{dlq_dir}/{config_id}/``
-    (``batch_id=N`` transform failures, ``api_batch_id=N`` delivery
-    failures). ``sink`` receives (config_id, ok_events_df, batch_id).
+    holds); notifications that match no config are counted from the same
+    collect and logged as a WARNING with a few sample URIs (the
+    reference's ``unmatched_uri`` counter, main.py:60-63). Each config's
+    files are then read cluster-side with that config's schema, in
+    ``ceil(scan bytes / spark.sql.files.maxPartitionBytes)`` partitions,
+    through its ONCE-compiled transform, and delivered by ``_deliver``
+    with the DLQs under ``{dlq_dir}/{config_id}/`` (``batch_id=N``
+    transform failures, ``api_batch_id=N`` delivery failures). Within a
+    config the transform DLQ commits before its events are posted.
+
+    The configs of a batch deliver concurrently on driver threads (the
+    reference reads and posts routed files on parallel workers), as many
+    at once as their partitions fit the cores: ``defaultParallelism //``
+    the widest config's partition count, at least 1, so a config whose
+    batch fills the cores alone runs alone. Every thread's Spark jobs
+    stay in the query's job group, so ``q.stop()`` cancels them. The
+    batch waits for every config and fails with the first config's
+    error. ``sink`` receives (config_id, ok_events_df, batch_id) and may
+    be called from several threads at once, so it must be thread-safe.
     """
     opts = opts or CompilerOptions()
     compiled = {
@@ -324,20 +379,50 @@ def run_notification_stream(
     }
     deduped = dedup_within_watermark(notifications, [uri_col], ts_col, horizon)
 
+    def deliver_config(config_id: str, data: DataFrame, batch_id: int) -> None:
+        _deliver(
+            compiled[config_id].serialize(data),
+            None if dlq_dir is None else f"{dlq_dir}/{config_id}",
+            batch_id,
+            None if sink is None else partial(sink, config_id),
+            http_cfg,
+            config_id,
+        )
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        by_config, _unmatched = files_by_config(batch_df, configs, uri_col)
-        for config_id, uris in sorted(by_config.items()):
-            plan = compiled.get(config_id)
-            if plan is None:
-                continue
-            data = spark.read.schema(schemas[config_id]).parquet(*uris)
-            _deliver(
-                plan.serialize(data),
-                None if dlq_dir is None else f"{dlq_dir}/{config_id}",
-                batch_id,
-                None if sink is None else partial(sink, config_id),
-                http_cfg,
+        by_config, unmatched = files_by_config(batch_df, configs, uri_col)
+        if unmatched:
+            log.warning(
+                "stream batch %d: %d notification(s) match no config, e.g. %s",
+                batch_id, len(unmatched), unmatched[:UNMATCHED_SAMPLE],
             )
+        reads = []
+        for config_id, uris in sorted(by_config.items()):
+            if config_id in compiled:
+                data = spark.read.schema(schemas[config_id]).parquet(*uris)
+                reads.append((config_id, data, _scan_partitions(data)))
+        if not reads:
+            return
+        # as many configs at once as their partitions fit the cores: a
+        # config that fills the cores alone runs alone, since sharing them
+        # would only hold back the configs ahead of it. This also bounds
+        # the driver threads (each with its own py4j connection and JVM
+        # thread) and the batches persisted at once.
+        cores = spark.sparkContext.defaultParallelism
+        widest = max(n for _, _, n in reads)
+        workers = max(1, min(len(reads), cores // widest))
+        # each target is wrapped here, on the batch's thread, so it takes
+        # the query's job group with it
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            futures = [
+                pool.submit(
+                    _in_job_group(spark, deliver_config),
+                    config_id, data.coalesce(n), batch_id,
+                )
+                for config_id, data, n in reads
+            ]
+        for f in futures:
+            f.result()
 
     return _start_foreach_batch(
         deduped, process_batch, checkpoint_dir, trigger_seconds, available_now

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 from gcs_parquet_dataflow_spark.config.model import load_configs
 from gcs_parquet_dataflow_spark.operators.routing import (
+    files_by_config,
     route_join,
     route_uris,
     with_routing,
@@ -43,10 +44,23 @@ def test_first_match_routing_expr(spark):
 
 def test_route_uris_split_and_parquet_filter(spark):
     df = spark.createDataFrame(URIS, "uri string")
-    routed, unmatched = route_uris(df, CONFIGS, parquet_only=True)
-    routed_ids = {r["config_id"] for r in routed.collect()}
-    assert routed_ids == {"specific", "general"}  # csvs filtered out
-    assert [r["uri"] for r in unmatched.collect()] == ["gs://other/f4.parquet"]
+    routed = route_uris(df, CONFIGS, parquet_only=True)
+    got = {r["uri"]: r["config_id"] for r in routed.collect()}
+    assert got == {  # csvs filtered out; the unmatched row kept as NULL
+        "gs://b/a/x/f1.parquet": "specific",
+        "gs://b/a/y/f2.parquet": "general",
+        "gs://other/f4.parquet": None,
+    }
+
+
+def test_files_by_config_lists_routed_and_unmatched_from_one_collect(spark):
+    df = spark.createDataFrame(URIS, "uri string")
+    by_config, unmatched = files_by_config(df, CONFIGS)
+    assert by_config == {
+        "specific": ["gs://b/a/x/f1.parquet"],
+        "general": ["gs://b/a/y/f2.parquet"],
+    }  # the csv config's file is neither routed nor unmatched
+    assert unmatched == ["gs://other/f4.parquet"]
 
 
 def test_route_join_agrees_with_expr(spark):

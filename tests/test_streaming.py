@@ -167,7 +167,7 @@ def test_dedup_within_watermark(spark, tmp_path):
     assert 1 <= uris.count("gs://b/f1") <= 2
 
 
-def test_notification_stream_dedups_and_routes(spark, tmp_path):
+def test_notification_stream_dedups_and_routes(spark, tmp_path, caplog):
     """The reference's notification-driven DAG (main.py:446-490) as a
     message stream: re-delivered URIs within the horizon are dropped by
     checkpointed dedup state (across micro-batches AND restarts), and
@@ -239,7 +239,17 @@ def test_notification_stream_dedups_and_routes(spark, tmp_path):
         (str(b_data), "2024-01-01 00:02:00"),
         (str(tmp_path / "unrouted"), "2024-01-01 00:02:30"),  # no config
     ])
+    caplog.set_level("WARNING", logger="gcs_parquet_dataflow_spark")
     run_once()
+    # the unrouted notification is counted and named, not dropped silently
+    unmatched = [
+        r.getMessage() for r in caplog.records
+        if "match no config" in r.getMessage()
+    ]
+    assert unmatched == [
+        f"stream batch 0: 1 notification(s) match no config, "
+        f"e.g. {[str(tmp_path / 'unrouted')]}"
+    ]
     a_events = [json.loads(e) for c, e in captured if c == "cfg_a"]
     b_events = [json.loads(e) for c, e in captured if c == "cfg_b"]
     # A's file processed ONCE despite two notifications
@@ -310,12 +320,33 @@ def test_sessionize_stream_merges_and_splits(spark, tmp_path):
     assert (2, "2024-01-01 00:05:00", 1) in got
 
 
-@pytest.mark.parametrize("runner", ["run_streaming", "run_notification_stream"])
-def test_streaming_http_path_writes_api_dlq(spark, tmp_path, runner):
-    """Both streaming runners' HTTP branch end-to-end with an unreachable
-    sink: delivery failures exhaust retries and land in the api DLQ lake
-    (per config for the notification stream) — delivery failure is
-    DATA, not a lost side effect."""
+def _notifications(spark, tmp_path, uris):
+    """A notification stream announcing ``uris`` in one micro-batch."""
+    notif = tmp_path / "notif"
+    spark.createDataFrame(
+        [(u, "2024-01-01 00:00:00") for u in uris], "uri string, ts string"
+    ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(
+        1
+    ).write.parquet(str(notif))
+    return spark.readStream.schema("uri string, ts timestamp").parquet(
+        str(notif)
+    )
+
+
+def _event_config(config_id, prefix):
+    return {
+        "config_id": config_id, "source_gcs_prefix": prefix,
+        "mixpanel_event_name_from_field": "event_name",
+        "field_mappings": [
+            {"source_field": "user_id", "mixpanel_field": "$user_id",
+             "type": "string"}],
+    }
+
+
+def _run_unreachable_http(spark, tmp_path, runner, dlq_dir):
+    """Run ``runner`` once (available_now) over two events posted to an
+    unreachable HTTP sink (port 1 refuses instantly; one attempt, no
+    retry sleep). The notification stream routes them to config "s"."""
     from gcs_parquet_dataflow_spark.sinks.http_batch import HttpSinkConfig
     from gcs_parquet_dataflow_spark.streaming.pipeline import (
         run_notification_stream,
@@ -326,49 +357,258 @@ def test_streaming_http_path_writes_api_dlq(spark, tmp_path, runner):
     spark.createDataFrame([("click", 1), ("buy", 2)], SCHEMA).coalesce(
         1
     ).write.mode("append").parquet(str(src))
-
     http_cfg = HttpSinkConfig(
-        url="http://127.0.0.1:1/collect",  # port 1: refused instantly
-        max_retries=1,                     # exhaust on first failure, no sleep
-        timeout_s=2,
+        url="http://127.0.0.1:1/collect", max_retries=1, timeout_s=2,
     )
-    dlq_dir = tmp_path / "dlq"
     ckpt = str(tmp_path / "ckpt")
     opts = CompilerOptions(now_epoch=F.lit(1700000000), uuid=F.lit("u"))
     if runner == "run_streaming":
         q = run_streaming(
             spark, CONFIG, SCHEMA, ckpt, path=str(src), opts=opts,
-            http_cfg=http_cfg, dlq_dir=str(dlq_dir), available_now=True,
+            http_cfg=http_cfg, dlq_dir=dlq_dir, available_now=True,
         )
+    else:
+        q = run_notification_stream(
+            spark, load_configs([_event_config("s", str(src))]),
+            {"s": SCHEMA}, _notifications(spark, tmp_path, [str(src)]), ckpt,
+            opts=opts, http_cfg=http_cfg, dlq_dir=dlq_dir, available_now=True,
+        )
+    q.awaitTermination(120)
+    return q
+
+
+@pytest.mark.parametrize("runner", ["run_streaming", "run_notification_stream"])
+def test_streaming_http_path_writes_api_dlq(spark, tmp_path, runner):
+    """Both streaming runners' HTTP branch end-to-end with an unreachable
+    sink: delivery failures exhaust retries and land in the api DLQ lake
+    (per config for the notification stream) — delivery failure is
+    DATA, not a lost side effect."""
+    dlq_dir = tmp_path / "dlq"
+    q = _run_unreachable_http(spark, tmp_path, runner, str(dlq_dir))
+    if runner == "run_streaming":
         api_dir = dlq_dir / "api_batch_id=0"
     else:
-        notif = tmp_path / "notif"
-        spark.createDataFrame(
-            [(str(src), "2024-01-01 00:00:00")], "uri string, ts string"
-        ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(
-            1
-        ).write.parquet(str(notif))
-        config = load_configs([{
-            "config_id": "s", "source_gcs_prefix": str(src),
-            "mixpanel_event_name_from_field": "event_name",
-            "field_mappings": [
-                {"source_field": "user_id", "mixpanel_field": "$user_id",
-                 "type": "string"}],
-        }])
-        notifications = spark.readStream.schema(
-            "uri string, ts timestamp"
-        ).parquet(str(notif))
-        q = run_notification_stream(
-            spark, config, {"s": SCHEMA}, notifications, ckpt, opts=opts,
-            http_cfg=http_cfg, dlq_dir=str(dlq_dir), available_now=True,
-        )
         api_dir = dlq_dir / "s" / "api_batch_id=0"
-    q.awaitTermination(120)
     assert q.exception() is None
     rows = spark.read.parquet(str(api_dir)).collect()
     assert len(rows) == 2
     assert all(r["status"] == "dlq" for r in rows)
     assert all("retries_exhausted" in r["detail"] for r in rows)
+
+
+@pytest.mark.fast
+@pytest.mark.parametrize("runner", ["run_streaming", "run_notification_stream"])
+def test_streaming_http_failures_without_dlq_are_logged(
+    spark, tmp_path, caplog, runner
+):
+    """With no ``dlq_dir`` the failed deliveries have nowhere to land:
+    each runner logs their count (and, per config, the config) as a
+    WARNING instead of dropping them silently."""
+    caplog.set_level("WARNING", logger="gcs_parquet_dataflow_spark")
+    q = _run_unreachable_http(spark, tmp_path, runner, None)
+    assert q.exception() is None
+    msgs = [
+        r.getMessage() for r in caplog.records
+        if r.name == "gcs_parquet_dataflow_spark.streaming.pipeline"
+        and r.levelname == "WARNING"
+    ]
+    want = "stream batch 0: 2 event(s) failed HTTP delivery"
+    if runner == "run_notification_stream":
+        want = "stream batch 0 config s: 2 event(s) failed HTTP delivery"
+    assert any(m.startswith(want) for m in msgs), msgs
+
+
+TWO_CONFIGS = {"a": [("click", 1), ("buy", 2)], "b": [("view", 3)]}
+
+
+def _config_stream(spark, tmp_path, rows_by_config):
+    """One config per key of ``rows_by_config``, each with one small
+    file of its rows, all announced in one micro-batch → (configs,
+    schemas, notifications)."""
+    uris = {}
+    for cid, rows in rows_by_config.items():
+        uris[cid] = str(tmp_path / cid)
+        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(uris[cid])
+    configs = load_configs([_event_config(c, u) for c, u in uris.items()])
+    return configs, dict.fromkeys(uris, SCHEMA), _notifications(
+        spark, tmp_path, list(uris.values())
+    )
+
+
+@pytest.mark.fast
+def test_notification_stream_jobs_stay_in_query_job_group(spark, tmp_path):
+    """The per-config delivery threads inherit the query's job group
+    (its runId): ``q.stop()`` cancels their jobs and per-query job
+    counters see them. Each config runs at least two jobs here (its
+    transform-DLQ write and the sink's collect) on top of the routing
+    collect."""
+    from gcs_parquet_dataflow_spark.streaming.pipeline import (
+        run_notification_stream,
+    )
+
+    configs, schemas, notifications = _config_stream(spark, tmp_path, TWO_CONFIGS)
+    got: dict[str, int] = {}
+
+    def sink(config_id, df, batch_id):
+        got[config_id] = len(df.collect())
+
+    q = run_notification_stream(
+        spark, configs, schemas, notifications, str(tmp_path / "ckpt"),
+        opts=CompilerOptions(now_epoch=F.lit(1700000000), uuid=F.lit("u")),
+        sink=sink, dlq_dir=str(tmp_path / "dlq"), available_now=True,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert got == {"a": 2, "b": 1}
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) >= 1 + 2 * 2, jobs
+
+
+@pytest.mark.fast
+def test_notification_stream_config_failure_fails_the_batch(spark, tmp_path):
+    """A config whose delivery raises fails the query once every config
+    of the batch has finished; no config leaves its persisted batch
+    cached."""
+    from gcs_parquet_dataflow_spark.streaming.pipeline import (
+        run_notification_stream,
+    )
+
+    configs, schemas, notifications = _config_stream(spark, tmp_path, TWO_CONFIGS)
+    delivered: list[str] = []
+
+    def sink(config_id, df, batch_id):
+        if config_id == "a":
+            raise RuntimeError("sink down for config a")
+        delivered.append(config_id)
+        df.collect()
+
+    cached = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: E731
+    before = cached()
+    q = run_notification_stream(
+        spark, configs, schemas, notifications, str(tmp_path / "ckpt"),
+        opts=CompilerOptions(now_epoch=F.lit(1700000000), uuid=F.lit("u")),
+        sink=sink, available_now=True,
+    )
+    with pytest.raises(Exception, match="sink down for config a"):
+        q.awaitTermination(120)
+    assert q.exception() is not None
+    assert delivered == ["b"]
+    assert cached() <= before
+
+
+@pytest.fixture
+def max_partition_bytes(spark):
+    """Set ``spark.sql.files.maxPartitionBytes`` for one test; restored
+    after it."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
+    spark.conf.set(key, old)
+
+
+@pytest.mark.fast
+@pytest.mark.parametrize("wide", [False, True], ids=["narrow", "wide"])
+def test_notification_stream_config_concurrency(
+    spark, tmp_path, max_partition_bytes, wide
+):
+    """A batch's configs deliver side by side only as far as their read
+    partitions fit the cores. Narrow: one partition each, more configs
+    than ``defaultParallelism``; every config gets its own rows, never
+    more configs at once than cores. Wide: ``maxPartitionBytes`` lowered
+    so that each config's file needs every core; the configs run one at
+    a time. Thread switches are made frequent so that a mix-up between
+    the configs' threads would show."""
+    import sys
+    import threading
+    import time
+
+    from gcs_parquet_dataflow_spark.streaming.pipeline import (
+        run_notification_stream,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    rows = {f"c{i}": [("click", i)] for i in range(2 if wide else cores + 1)}
+    configs, schemas, notifications = _config_stream(spark, tmp_path, rows)
+    if wide:
+        smallest = min(
+            f.stat().st_size for c in rows for f in (tmp_path / c).glob("*.parquet")
+        )
+        max_partition_bytes(smallest // cores)
+    lock = threading.Lock()
+    active, peak, got = [0], [0], {}
+
+    def sink(config_id, df, batch_id):
+        with lock:
+            active[0] += 1
+            peak[0] = max(peak[0], active[0])
+        time.sleep(0.5)  # hold the slot so that every free thread overlaps
+        users = [
+            json.loads(r["event_json"])["properties"]["$user_id"]
+            for r in df.collect()
+        ]
+        with lock:
+            got[config_id] = users
+            active[0] -= 1
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        q = run_notification_stream(
+            spark, configs, schemas, notifications, str(tmp_path / "ckpt"),
+            opts=CompilerOptions(now_epoch=F.lit(1700000000), uuid=F.lit("u")),
+            sink=sink, available_now=True,
+        )
+        q.awaitTermination(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not q.isActive and q.exception() is None
+    assert got == {cid: [str(r[0][1])] for cid, r in rows.items()}
+    if wide:
+        assert peak[0] == 1
+    else:
+        assert 2 <= peak[0] <= cores
+
+
+@pytest.mark.fast
+def test_in_job_group_without_pinned_threads(spark, monkeypatch):
+    """With pinned threads off, PySpark's ``inheritable_thread_target``
+    hands back the session it was given; the delivery target then runs
+    unwrapped instead of calling the session."""
+    from gcs_parquet_dataflow_spark.streaming import pipeline
+
+    def target(x):
+        return x + 1
+
+    wrapped = pipeline._in_job_group(spark, target)
+    assert wrapped is not target and wrapped(1) == 2
+    monkeypatch.setattr(pipeline, "inheritable_thread_target", lambda f: f)
+    assert pipeline._in_job_group(spark, target) is target
+
+
+@pytest.mark.fast
+def test_scan_partitions(spark, tmp_path, max_partition_bytes):
+    """A read's partition target is ceil(scan bytes / maxPartitionBytes):
+    12 tiny files → 1, and with the cap lowered to a third of the files'
+    bytes → 3."""
+    import math
+
+    from gcs_parquet_dataflow_spark.streaming.pipeline import _scan_partitions
+
+    path = tmp_path / "tiny"
+    spark.range(120).selectExpr("id", "cast(id as string) s").repartition(
+        12
+    ).write.parquet(str(path))
+    files = list(path.glob("*.parquet"))
+    assert len(files) == 12
+    read = lambda: spark.read.parquet(str(path))  # noqa: E731
+    assert _scan_partitions(read()) == 1
+
+    total = sum(f.stat().st_size for f in files)
+    cap = math.ceil(total / 3)
+    max_partition_bytes(cap)
+    assert _scan_partitions(read()) == math.ceil(total / cap) == 3
 
 
 @pytest.mark.fast

@@ -377,7 +377,6 @@ def _dateutil_parse_udf():
 def cast_unix_timestamp_auto(
     col: Column,
     dtype: T.DataType,
-    now_epoch: Column | None = None,
     dateutil_fallback: bool = False,
 ) -> Column:
     """Reference ``unix_timestamp_auto`` (main.py:131-149, 254-259):

@@ -46,19 +46,18 @@ def with_routing(
     df: DataFrame,
     configs: list[SourceConfig],
     uri_col: str = "uri",
-    out_col: str = "config_id",
 ) -> DataFrame:
     """Attach the routed config_id column (NULL = unmatched)."""
-    return df.withColumn(out_col, route_expr(configs, F.col(uri_col)))
+    return df.withColumn("config_id", route_expr(configs, F.col(uri_col)))
 
 
 def route_uris(
     df: DataFrame,
     configs: list[SourceConfig],
-    uri_col: str = "uri",
     parquet_only: bool = True,
 ) -> DataFrame:
-    """``df`` with ``config_id`` attached, NULL where no config matches.
+    """``df`` (URIs in ``uri``) with ``config_id`` attached, NULL where
+    no config matches.
 
     The NULL rows stay, so one action reads both the routed and the
     unmatched URIs; the reference only counts the unmatched ones
@@ -67,7 +66,7 @@ def route_uris(
     rows routed to a config whose file_type is not PARQUET
     (case-insensitive) are dropped.
     """
-    routed = with_routing(df, configs, uri_col)
+    routed = with_routing(df, configs)
     if parquet_only:
         parquet_ids = [
             c.config_id for c in configs if c.file_type.upper() == "PARQUET"
@@ -81,23 +80,22 @@ def route_uris(
 def files_by_config(
     df: DataFrame,
     configs: list[SourceConfig],
-    uri_col: str = "uri",
     parquet_only: bool = True,
 ) -> tuple[dict[str, list[str]], list[str]]:
-    """Route a DataFrame of file URIs and collect the FILE LIST (tiny —
-    names, never row data) in one action → ({config_id: [uri, ...]},
-    unmatched uris). The one driver-side file list both the batch
+    """Route a DataFrame of file URIs (column ``uri``) and collect the
+    FILE LIST (tiny — names, never row data) in one action →
+    ({config_id: [uri, ...]}, unmatched uris). The one driver-side file list both the batch
     planner and the notification stream read per config from."""
     # route_uris is looked up as this module's global on each call, so a
     # wrapper set on the module attribute (perfbench's traced run) sees it
-    routed = route_uris(df, configs, uri_col=uri_col, parquet_only=parquet_only)
+    routed = route_uris(df, configs, parquet_only=parquet_only)
     by_config: dict[str, list[str]] = {}
     unmatched: list[str] = []
-    for r in routed.select(uri_col, "config_id").collect():
+    for r in routed.select("uri", "config_id").collect():
         if r["config_id"] is None:
-            unmatched.append(r[uri_col])
+            unmatched.append(r["uri"])
         else:
-            by_config.setdefault(r["config_id"], []).append(r[uri_col])
+            by_config.setdefault(r["config_id"], []).append(r["uri"])
     return by_config, unmatched
 
 

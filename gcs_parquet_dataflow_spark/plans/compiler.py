@@ -23,6 +23,8 @@ Observable semantics reproduced (citations into the reference):
 6. defaults: time ← now() if absent               (main.py:270-271),
    $insert_id ← uuid4() if absent                 (main.py:272-273)
 7. missing-both-ids is a metric, not an error     (main.py:274-277)
+   → counted from the output ``properties`` by
+   ``operators.metrics.observe_transform``
 8. NULL properties stripped at serialization      (main.py:125-126, 278)
    → ``to_json`` ``ignoreNullFields`` reproduces this
 9. any-error rows carry a structured _error and split to a DLQ
@@ -54,14 +56,13 @@ _NONE_PROCESSED_FIELDS = {"$user_id", "$device_id", "$insert_id"}
 class CompilerOptions:
     """Injection points for the nondeterministic leaves (SURVEY §7 hard
     part 3): tests / oracle runs replace now()/uuid() with literals or
-    key-derived expressions."""
+    key-derived expressions. The ``time``/``$insert_id`` defaults
+    (main.py:270-273) are always compiled in; these only choose what
+    they evaluate to."""
 
     token: str | None = None
     now_epoch: Column | None = None
     uuid: Column | None = None
-    # when False, drop the wildcard/defaults nondeterminism entirely
-    # (used by oracle-checked queries)
-    include_defaults: bool = True
     # when False, strings the JVM format ladder can't parse fall through
     # to a vectorized dateutil pandas_udf — full reference-grammar parity
     # (main.py:131-149) at Python-slow-path cost for the residual rows.
@@ -83,7 +84,6 @@ class CompiledTransform:
     event_expr: Column
     property_exprs: list[tuple[str, Column]]
     error_expr: Column  # struct<error_type,reason> — NULL when the row is ok
-    missing_ids_expr: Column  # metric predicate (main.py:274-277)
 
     def apply(self, df: DataFrame) -> DataFrame:
         """→ DataFrame[event string, properties struct, _error struct].
@@ -174,13 +174,13 @@ class CompiledTransform:
         )
 
 
-def split_dlq(df: DataFrame, error_col: str = ERROR_COL) -> tuple[DataFrame, DataFrame]:
+def split_dlq(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split a transformed DataFrame into (ok, dlq) on the error column —
     the engine's replacement for Beam tagged outputs (main.py:151-162,
     SURVEY §2.10). Callers that consume both sides should ``.persist()``
     upstream to avoid recompute."""
-    ok = df.filter(F.col(error_col).isNull()).drop(error_col)
-    dlq = df.filter(F.col(error_col).isNotNull())
+    ok = df.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
+    dlq = df.filter(F.col(ERROR_COL).isNotNull())
     return ok, dlq
 
 
@@ -209,14 +209,14 @@ def _compile_mapping(
         value = casts.cast_unix_timestamp_auto(
             src, dtype, dateutil_fallback=not opts.strict_timestamps
         )
-        if m.mixpanel_field == "time" and opts.include_defaults:
+        if m.mixpanel_field == "time":
             # unparseable/absent `time` falls back to now()
             # (main.py:145-149, 270-271)
             value = F.coalesce(value, opts.now_expr())
         return value
     if m.type == "string_or_uuid":
         value = casts.cast_string(src, dtype)
-        if m.mixpanel_field == "$insert_id" and opts.include_defaults:
+        if m.mixpanel_field == "$insert_id":
             # only honored for $insert_id (main.py:260-263). Python `or`
             # falls through on EVERY falsy str(value) — None AND "" —
             # so a coalesce (NULL-only) is not enough.
@@ -384,24 +384,23 @@ def compile_config(
     # properties dict at end-of-row — which in the reference includes a
     # null-skipped or cast-failed mapped value, not just a missing
     # mapping. Expressed as a coalesce over the mapped value.
-    if opts.include_defaults:
-        mapping_by_target = {m.mixpanel_field: m for m in config.explicit_mappings}
-        time_idx = next(
-            (i for i, (n, _) in enumerate(property_exprs) if n == "time"), None
-        )
-        if time_idx is None:
-            property_exprs.append(("time", opts.now_expr()))
-        else:
-            m = mapping_by_target.get("time")
-            now = opts.now_expr()
-            if m is not None and m.type in ("string", "string_or_uuid"):
-                now = now.cast("string")
-            elif m is not None and m.type == "float":
-                now = now.cast("double")
-            name, expr = property_exprs[time_idx]
-            property_exprs[time_idx] = (name, F.coalesce(expr, now))
-        if "$insert_id" not in produced:
-            property_exprs.append(("$insert_id", opts.uuid_col()))
+    mapping_by_target = {m.mixpanel_field: m for m in config.explicit_mappings}
+    time_idx = next(
+        (i for i, (n, _) in enumerate(property_exprs) if n == "time"), None
+    )
+    if time_idx is None:
+        property_exprs.append(("time", opts.now_expr()))
+    else:
+        m = mapping_by_target.get("time")
+        now = opts.now_expr()
+        if m is not None and m.type in ("string", "string_or_uuid"):
+            now = now.cast("string")
+        elif m is not None and m.type == "float":
+            now = now.cast("double")
+        name, expr = property_exprs[time_idx]
+        property_exprs[time_idx] = (name, F.coalesce(expr, now))
+    if "$insert_id" not in produced:
+        property_exprs.append(("$insert_id", opts.uuid_col()))
 
     # --- non-finite serialization guard (main.py:279-284) --------------
     # The reference serializes with json.dumps(..., allow_nan=False):
@@ -449,23 +448,9 @@ def compile_config(
         )
     )
 
-    # --- soft validation metric (main.py:274-277) ----------------------
-    # The reference checks Python truthiness (`not properties.get(...)`),
-    # so an empty-string id counts as missing — NULLIF('') on the string
-    # form reproduces that. (Ids are strings in every reference config;
-    # a numeric-0 id would still count as present here.)
-    id_exprs = [expr for name, expr in property_exprs if name in ("$user_id", "$device_id")]
-    if id_exprs:
-        missing_ids = F.coalesce(
-            *[F.nullif(e.cast("string"), F.lit("")) for e in id_exprs]
-        ).isNull()
-    else:
-        missing_ids = F.lit(True)
-
     return CompiledTransform(
         config=config,
         event_expr=event_expr,
         property_exprs=property_exprs,
         error_expr=error_expr,
-        missing_ids_expr=missing_ids,
     )

@@ -48,7 +48,6 @@ class HttpSinkConfig:
     timeout_s: float = DEFAULT_TIMEOUT_S
     max_retries: int = DEFAULT_MAX_RETRIES
     backoff_cap_s: float = DEFAULT_BACKOFF_CAP_S
-    extra_params: dict | None = None  # e.g. {"strict": "1"}
 
 
 def _default_post(cfg: HttpSinkConfig, payload_gz: bytes) -> tuple[int, str]:
@@ -56,9 +55,10 @@ def _default_post(cfg: HttpSinkConfig, payload_gz: bytes) -> tuple[int, str]:
     import requests
 
     auth = (cfg.auth_user, cfg.auth_password) if cfg.auth_user else None
+    # the reference's /import query string (main.py:353-368)
     resp = requests.post(
         cfg.url,
-        params=cfg.extra_params or {"strict": "1"},
+        params={"strict": "1"},
         data=payload_gz,
         headers={
             "Content-Type": "application/x-ndjson",
@@ -106,31 +106,25 @@ def _send_with_retry(
 def post_partition(
     events: Iterable[str],
     cfg: HttpSinkConfig,
-    post_fn: Callable[[HttpSinkConfig, bytes], tuple[int, str]] | None = None,
     sleep_fn: Callable[[float], None] = time.sleep,
 ) -> Iterator[tuple[str, str, str]]:
     """Buffer + flush loop for one partition (main.py:404-423's bundle
     buffer, with Spark partitions as the bundle unit)."""
-    post_fn = post_fn or _default_post
     buf: list[str] = []
     buf_bytes = 0
     for e in events:
         buf.append(e)
         buf_bytes += len(e.encode("utf-8")) + 1
         if len(buf) >= cfg.batch_events or buf_bytes >= cfg.batch_bytes:
-            yield from _send_with_retry(cfg, buf, post_fn, sleep_fn)
+            yield from _send_with_retry(cfg, buf, _default_post, sleep_fn)
             buf, buf_bytes = [], 0
     if buf:
-        yield from _send_with_retry(cfg, buf, post_fn, sleep_fn)
+        yield from _send_with_retry(cfg, buf, _default_post, sleep_fn)
 
 
-def post_events(
-    df: DataFrame,
-    cfg: HttpSinkConfig,
-    event_col: str = "event_json",
-    post_fn: Callable[[HttpSinkConfig, bytes], tuple[int, str]] | None = None,
-) -> DataFrame:
-    """Distributed send; → DataFrame[event_json, status, detail].
+def post_events(df: DataFrame, cfg: HttpSinkConfig) -> DataFrame:
+    """Distributed send of ``df``'s ``event_json`` column; →
+    DataFrame[event_json, status, detail].
 
     Downstream: ``.filter("status = 'dlq'")`` is the API-failure DLQ the
     reference publishes to Pub/Sub (main.py:519-523) — write it wherever
@@ -142,13 +136,13 @@ def post_events(
 
         def events() -> Iterator[str]:
             for pdf in batches:
-                yield from pdf[event_col].tolist()
+                yield from pdf["event_json"].tolist()
 
         # one flush loop per PARTITION (batches stream through it), so the
         # 2000-event/2MiB thresholds see the whole partition, not one
         # Arrow batch; outcomes re-chunk to bound executor memory
         chunk: list[tuple[str, str, str]] = []
-        for outcome in post_partition(events(), cfg, post_fn):
+        for outcome in post_partition(events(), cfg):
             chunk.append(outcome)
             if len(chunk) >= 10_000:
                 yield pd.DataFrame(chunk, columns=["event_json", "status", "detail"])
@@ -156,4 +150,4 @@ def post_events(
         if chunk:
             yield pd.DataFrame(chunk, columns=["event_json", "status", "detail"])
 
-    return df.select(event_col).mapInPandas(run, schema=OUTCOME_SCHEMA)
+    return df.select("event_json").mapInPandas(run, schema=OUTCOME_SCHEMA)

@@ -18,6 +18,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -178,13 +179,22 @@ def backfill(
     or overwrite-per-partition).
 
     The ledger is an append-only parquet table of (unit, status); the
-    latest row per unit wins. Returns {unit: final_status} for this
-    invocation. Failures are recorded (status='failed') and re-raised
+    latest row per unit wins. A ledger that exists but cannot be read
+    fails the call before any unit runs. Returns {unit: final_status}
+    for this invocation. Failures are recorded (status='failed') and re-raised
     only after every unit has been attempted, so one bad partition
     doesn't strand the rest of the backfill.
     """
     try:
         ledger = spark.read.parquet(ledger_path)
+    except AnalysisException as e:
+        # no ledger yet: the path is absent or holds no committed file.
+        # Any other read error (a torn part, no permission) propagates:
+        # reading it as empty would re-run every unit and restart seq.
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        state, seq0 = {}, 0
+    else:
         from pyspark.sql import Window as W
 
         w = W.partitionBy("unit").orderBy(F.desc("seq"))
@@ -195,8 +205,6 @@ def backfill(
         )
         state = {r["unit"]: r["status"] for r in latest.collect()}
         seq0 = ledger.agg(F.max("seq")).first()[0] or 0
-    except Exception:
-        state, seq0 = {}, 0
 
     def record(unit: str, status: str, seq: int) -> None:
         spark.createDataFrame(

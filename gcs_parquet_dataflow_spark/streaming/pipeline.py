@@ -330,9 +330,6 @@ def run_notification_stream(
     sink: Callable[[str, DataFrame, int], None] | None = None,
     http_cfg: HttpSinkConfig | None = None,
     dlq_dir: str | None = None,
-    horizon: str = DEFAULT_DEDUP_HORIZON,
-    uri_col: str = "uri",
-    ts_col: str = "ts",
     trigger_seconds: int = DEFAULT_TRIGGER_S,
     available_now: bool = False,
 ) -> StreamingQuery:
@@ -345,9 +342,10 @@ def run_notification_stream(
     ts timestamp) — Kafka/Pub/Sub-Lite in production, a file/rate source
     in tests. Unlike ``run_streaming`` (whose file source makes dedup a
     checkpoint guarantee), a message bus can RE-DELIVER: here
-    ``dropDuplicatesWithinWatermark`` state (checkpointed, evicted past
-    ``horizon``) drops re-deliveries exactly like the reference's 5-min
-    windowed Distinct (main.py:461-463).
+    ``dropDuplicatesWithinWatermark`` state on ``uri`` (checkpointed,
+    evicted past ``DEFAULT_DEDUP_HORIZON`` of event time ``ts``) drops
+    re-deliveries exactly like the reference's 5-min windowed Distinct
+    (main.py:461-463).
 
     Per micro-batch the routed notification rows are collected — FILE
     NAMES, not data (the same driver-side file list ``plan_batch``
@@ -377,7 +375,9 @@ def run_notification_stream(
         for c in configs
         if c.config_id in schemas
     }
-    deduped = dedup_within_watermark(notifications, [uri_col], ts_col, horizon)
+    deduped = dedup_within_watermark(
+        notifications, ["uri"], "ts", DEFAULT_DEDUP_HORIZON
+    )
 
     def deliver_config(config_id: str, data: DataFrame, batch_id: int) -> None:
         _deliver(
@@ -390,7 +390,7 @@ def run_notification_stream(
         )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        by_config, unmatched = files_by_config(batch_df, configs, uri_col)
+        by_config, unmatched = files_by_config(batch_df, configs)
         if unmatched:
             log.warning(
                 "stream batch %d: %d notification(s) match no config, e.g. %s",

@@ -247,6 +247,26 @@ def test_backfill_ledger_resumes_and_records_failures(spark, tmp_path):
     assert calls == [] and set(res.values()) == {"done"}
 
 
+def test_backfill_fails_on_unreadable_ledger(spark, tmp_path):
+    """A ledger that exists but cannot be read (here a torn part file)
+    fails the backfill before any unit runs. Reading it as empty would
+    re-run every done unit and restart ``seq``, so a later resume would
+    see two statuses at one seq."""
+    from gcs_parquet_dataflow_spark.sources.batch import backfill
+
+    ledger = str(tmp_path / "ledger")
+    units = ["d1", "d2", "d3"]
+    assert backfill(spark, units, lambda unit: None, ledger) == dict.fromkeys(
+        units, "done"
+    )
+    (tmp_path / "ledger" / "part-torn.parquet").write_bytes(b"PAR1torn")
+
+    calls = []
+    with pytest.raises(Exception, match="part-torn.parquet"):
+        backfill(spark, units, calls.append, ledger)
+    assert calls == []
+
+
 def test_register_views_enables_raw_sql_with_pushdown(spark):
     """SQL entry point: registered views answer plain spark.sql with
     results identical to the DataFrame builder, and filters still reach

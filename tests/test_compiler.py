@@ -4,6 +4,7 @@ branch of SURVEY §1.2/§2.6. Deterministic via injected now/uuid."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import math
 from datetime import datetime, timezone
@@ -195,6 +196,24 @@ def test_timestamp_formats(spark):
     out = run_rows(spark, rows)
     got = [doc["properties"]["time"] for doc, _ in out]
     assert got == list(cases.values())
+
+
+def test_strict_timestamps_off_reaches_dateutil_grammar(spark):
+    """``strict_timestamps=False`` is the compiler's route to the
+    reference's dateutil grammar (main.py:131-149): a string the JVM
+    format ladder misses parses to dateutil's epoch. Under the default
+    the same string is unparseable, so ``time`` falls back to now()."""
+    value = "Jan 5th 2024 10:00"
+    want = int(datetime(2024, 1, 5, 10, 0, tzinfo=timezone.utc).timestamp())
+    df = spark.createDataFrame([ROW_OK[:1] + (value,) + ROW_OK[2:]], SCHEMA)
+
+    def time_of(opts):
+        [r] = compile_config(CONFIG, SCHEMA, opts).serialize(df).collect()
+        assert r["_error"] is None
+        return json.loads(r["event_json"])["properties"]["time"]
+
+    assert time_of(dataclasses.replace(OPTS(), strict_timestamps=False)) == want
+    assert time_of(OPTS()) == FIXED_NOW
 
 
 def test_wildcard_skips_consumed_fields(spark):

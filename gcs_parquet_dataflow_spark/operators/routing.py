@@ -19,8 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from gcs_parquet_dataflow_spark.config.model import SourceConfig
+from gcs_parquet_dataflow_spark.session import local_frame
 
 
 def route_expr(configs: list[SourceConfig], uri: Column) -> Column:
@@ -99,16 +101,25 @@ def files_by_config(
     return by_config, unmatched
 
 
+CONFIGS_SCHEMA = StructType([
+    StructField("config_id", StringType()),
+    StructField("source_gcs_prefix", StringType()),
+    StructField("file_type", StringType()),
+    StructField("config_order", IntegerType()),
+])
+
+
 def configs_df(df_or_spark, configs: list[SourceConfig]) -> DataFrame:
-    """Routing table as a (broadcastable) DataFrame for the join strategy."""
+    """Routing table as a (broadcastable) DataFrame for the join strategy:
+    an Arrow ``LocalRelation``, never a Python RDD."""
     spark = df_or_spark if not isinstance(df_or_spark, DataFrame) else df_or_spark.sparkSession
-    return spark.createDataFrame(
-        [
-            (c.config_id, c.source_gcs_prefix, c.file_type, c.config_order)
-            for c in configs
-        ],
-        "config_id string, source_gcs_prefix string, file_type string, config_order int",
-    )
+    columns = [
+        [c.config_id for c in configs],
+        [c.source_gcs_prefix for c in configs],
+        [c.file_type for c in configs],
+        [c.config_order for c in configs],
+    ]
+    return local_frame(spark, columns, CONFIGS_SCHEMA)
 
 
 def route_join(

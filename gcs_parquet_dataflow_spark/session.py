@@ -10,13 +10,18 @@ but every setting is chosen so the same code scales to a real cluster:
 - UTC session timezone so results are comparable with the DuckDB oracle and
   stable across deployment regions.
 - Arrow enabled for the Pandas-UDF slow path.
+
+``local_frame`` builds the small frames the driver already holds (file
+lists, ledger rows, routing tables) without a Python RDD.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -75,6 +80,32 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _silence_benign_warnings(spark)
     return spark
+
+
+def local_frame(
+    spark: SparkSession, columns: Sequence[Sequence], schema: StructType
+) -> DataFrame:
+    """A DataFrame of driver-held values: ``columns`` holds one sequence
+    per field of ``schema``, in field order.
+
+    The values go through a ``pyarrow.Table``, which becomes a
+    ``LocalRelation`` in the plan: no Python worker and no Spark job runs
+    until the frame meets real data, and collecting it alone runs none.
+    ``createDataFrame`` of a Python list would instead pickle the rows
+    into a Python RDD of ``defaultParallelism`` slices, each needing a
+    Python worker. The Arrow-table path does not read
+    ``spark.sql.execution.arrow.pyspark.enabled``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    arrays = [
+        pa.array(list(col), type=field.type)
+        for col, field in zip(columns, arrow_schema, strict=True)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def _silence_benign_warnings(spark: SparkSession) -> None:

@@ -11,6 +11,11 @@ Reading happens per config so each source keeps its own concrete schema
 reader + row-group splits replace the reference's hand-rolled
 20 000-row Arrow batching (main_batch.py:87-94 — OOM safety that
 ``spark.sql.files.maxPartitionBytes`` provides natively).
+
+Driver-held lists (the glob listing, the unmatched files, the empty
+result, each ledger row) become Arrow ``LocalRelation`` frames through
+``session.local_frame``, never Python RDDs: building, collecting or
+writing them starts no Python worker, and only the write runs a job.
 """
 
 from __future__ import annotations
@@ -21,6 +26,7 @@ from typing import Callable
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gcs_parquet_dataflow_spark.config.model import SourceConfig
 from gcs_parquet_dataflow_spark.operators.routing import files_by_config
@@ -30,8 +36,22 @@ from gcs_parquet_dataflow_spark.plans.compiler import (
     compile_config,
     split_dlq,
 )
+from gcs_parquet_dataflow_spark.session import local_frame
 
 URI_COL = "_uri"
+URIS_SCHEMA = StructType([StructField("uri", StringType())])
+EVENTS_SCHEMA = StructType([
+    StructField("event_json", StringType()),
+    StructField("_error", StructType([
+        StructField("error_type", StringType()),
+        StructField("reason", StringType()),
+    ])),
+])
+LEDGER_SCHEMA = StructType([
+    StructField("unit", StringType()),
+    StructField("status", StringType()),
+    StructField("seq", LongType()),
+])
 
 
 def read_with_lineage(
@@ -73,7 +93,9 @@ def list_files(spark: SparkSession, pattern: str) -> DataFrame:
     """Expand a glob to a one-column DataFrame of file URIs (reference
     fileio.MatchAll, main_batch.py:452-457). Uses the same Hadoop
     FileSystem machinery as the DataSource, so gs:// works when the GCS
-    connector jar is present."""
+    connector jar is present. The listing is already on the driver, so
+    the frame is an Arrow ``LocalRelation`` (never a Python RDD):
+    routing and collecting it run no Spark job."""
     sc = spark.sparkContext
     jvm = sc._jvm
     conf = sc._jsc.hadoopConfiguration()
@@ -83,7 +105,7 @@ def list_files(spark: SparkSession, pattern: str) -> DataFrame:
     uris = (
         [str(s.getPath().toString()) for s in statuses] if statuses is not None else []
     )
-    return spark.createDataFrame([(u,) for u in uris], "uri string")
+    return local_frame(spark, [uris], URIS_SCHEMA)
 
 
 @dataclass
@@ -114,6 +136,10 @@ def plan_batch(
     main_batch.py:452-489) minus the CoGroupByKey shuffle: routing is an
     inline expression and the "join" of files to configs happens on the
     driver over the file *list* (tiny), never over row data.
+
+    The listing, its routing and the unmatched frame run no Spark job:
+    both driver-held lists are Arrow ``LocalRelation`` frames, never
+    Python RDDs. The only jobs are each config's schema read.
     """
     by_config, unmatched = files_by_config(
         list_files(spark, pattern), configs, parquet_only=parquet_only
@@ -127,9 +153,7 @@ def plan_batch(
         compiled = compile_config(config, schema_wo_lineage, opts)
         batches.append(RoutedBatch(config, files, df, compiled))
     # built from the names the routing collect already holds
-    return batches, spark.createDataFrame(
-        [(u,) for u in unmatched], "uri string"
-    )
+    return batches, local_frame(spark, [unmatched], URIS_SCHEMA)
 
 
 def run_batch(
@@ -146,9 +170,7 @@ def run_batch(
     batches, unmatched = plan_batch(spark, configs, pattern, opts)
     events_parts = [b.events() for b in batches]
     if not events_parts:
-        empty = spark.createDataFrame(
-            [], "event_json string, _error struct<error_type:string,reason:string>"
-        )
+        empty = local_frame(spark, [[], []], EVENTS_SCHEMA)
         return empty, empty, unmatched
     all_events = events_parts[0]
     for p in events_parts[1:]:
@@ -178,9 +200,10 @@ def backfill(
     each unit's ``process`` is (the lake writers here are — batch-keyed
     or overwrite-per-partition).
 
-    The ledger is an append-only parquet table of (unit, status); the
-    latest row per unit wins. A ledger that exists but cannot be read
-    fails the call before any unit runs. Returns {unit: final_status}
+    The ledger is an append-only parquet table of (unit, status, seq);
+    the latest row per unit (highest ``seq``) wins, and resuming reads it
+    with one action. Each record appends one part file. A ledger that
+    exists but cannot be read fails the call before any unit runs. Returns {unit: final_status}
     for this invocation. Failures are recorded (status='failed') and re-raised
     only after every unit has been attempted, so one bad partition
     doesn't strand the rest of the backfill.
@@ -201,15 +224,16 @@ def backfill(
         latest = (
             ledger.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select("unit", "status")
-        )
-        state = {r["unit"]: r["status"] for r in latest.collect()}
-        seq0 = ledger.agg(F.max("seq")).first()[0] or 0
+            .select("unit", "status", "seq")
+        ).collect()
+        state = {r["unit"]: r["status"] for r in latest}
+        # the max seq is some unit's latest row: no second action
+        seq0 = max((r["seq"] for r in latest), default=0)
 
     def record(unit: str, status: str, seq: int) -> None:
-        spark.createDataFrame(
-            [(unit, status, seq)], "unit string, status string, seq long"
-        ).write.mode("append").parquet(ledger_path)
+        local_frame(spark, [[unit], [status], [seq]], LEDGER_SCHEMA).write.mode(
+            "append"
+        ).parquet(ledger_path)
 
     results: dict[str, str] = {}
     errors: list[tuple[str, Exception]] = []

@@ -357,3 +357,164 @@ def test_read_with_lineage_orc(spark, tmp_path):
         .executedPlan().toString()
     )
     assert "PushedFilters" in plan and "id" in plan.split("PushedFilters", 1)[1][:200]
+
+
+# ---------------------------------------------------------------------------
+# Driver-held frames are Arrow LocalRelations, not Python-RDD jobs
+# ---------------------------------------------------------------------------
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted in a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _landing(root):
+    """3 routed sources, one unrouted file and one non-parquet object
+    (under a routed prefix; the ``*.parquet`` glob skips it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for i, name in enumerate(("web", "app", "pos", "other")):
+        (root / name).mkdir()
+        pq.write_table(
+            pa.table({"id": [i], "event_name": [name]}),
+            str(root / name / "part-0.parquet"),
+        )
+    (root / "web" / "_manifest.txt").write_text("not parquet\n")
+    return load_configs([
+        {"config_id": name, "source_gcs_prefix": f"file:{root}/{name}/",
+         "mixpanel_event_name_from_field": "event_name", "field_mappings": []}
+        for name in ("web", "app", "pos")
+    ])
+
+
+def test_plan_batch_and_ledger_record_job_counts(spark, tmp_path):
+    """Listing, routing and the unmatched frame run no Spark job, so
+    ``plan_batch`` runs only the 3 per-config parquet schema reads; one
+    ledger ``record`` runs exactly 1 job (its write)."""
+    from gcs_parquet_dataflow_spark.sources.batch import backfill, plan_batch
+
+    land = tmp_path / "land"
+    land.mkdir()
+    configs = _landing(land)
+    pattern = f"file:{land}/*/*.parquet"
+
+    (batches, unmatched), jobs = _jobs_run_by(
+        spark, lambda: plan_batch(spark, configs, pattern)
+    )
+    assert sorted(b.config.config_id for b in batches) == ["app", "pos", "web"]
+    assert jobs == 3
+    assert "LocalRelation" in _optimized_plan(list_files(spark, pattern))
+    assert "LocalRelation" in _optimized_plan(unmatched)
+    rows, jobs = _jobs_run_by(spark, unmatched.collect)
+    assert [r["uri"] for r in rows] == [f"file:{land}/other/part-0.parquet"]
+    assert jobs == 0
+
+    # a fresh ledger reads as empty without a job; the one record is 1
+    status, jobs = _jobs_run_by(
+        spark, lambda: backfill(spark, ["u1"], lambda u: None, str(tmp_path / "l"))
+    )
+    assert status == {"u1": "done"} and jobs == 1
+
+
+def test_local_frame_round_trips_driver_values(spark, tmp_path):
+    """``local_frame`` returns the driver's values unchanged, keeps the
+    declared types and does not depend on the Arrow conf."""
+    from gcs_parquet_dataflow_spark.session import local_frame
+    from gcs_parquet_dataflow_spark.sources.batch import (
+        URIS_SCHEMA,
+        backfill,
+        plan_batch,
+    )
+
+    uris = ["gs://b/it's a file.parquet", "gs://b/dir with space/x",
+            "gs://b/données/ファイル.parquet"]
+    assert [r["uri"] for r in local_frame(spark, [uris], URIS_SCHEMA).collect()] == uris
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = local_frame(spark, [uris], URIS_SCHEMA)
+        assert [r["uri"] for r in df.collect()] == uris
+        assert "LocalRelation" in _optimized_plan(df)
+    finally:
+        spark.conf.set(key, before)
+
+    # an empty glob and an empty unmatched list: empty `uri string` frames
+    empty = list_files(spark, f"file:{tmp_path}/nothing-here/*")
+    assert empty.schema.simpleString() == "struct<uri:string>"
+    assert empty.collect() == []
+    land = tmp_path / "land"
+    land.mkdir()
+    configs = _landing(land)
+    batches, unmatched = plan_batch(
+        spark, configs, f"file:{land}/[!o]*/*.parquet"
+    )
+    assert len(batches) == 3
+    assert unmatched.schema.simpleString() == "struct<uri:string>"
+    assert unmatched.collect() == []
+
+    # a ledger part written before (Python-RDD frame) and one written
+    # now read as one table with ``seq`` still a long
+    ledger = str(tmp_path / "ledger")
+    spark.createDataFrame(
+        [("d1", "done", 1)], "unit string, status string, seq long"
+    ).write.parquet(ledger)
+    assert backfill(spark, ["d1", "d2"], lambda u: None, ledger) == {
+        "d1": "done", "d2": "done",
+    }
+    table = spark.read.parquet(ledger)
+    assert table.schema.simpleString() == (
+        "struct<unit:string,status:string,seq:bigint>"
+    )
+    assert sorted(tuple(r) for r in table.collect()) == [
+        ("d1", "done", 1), ("d2", "done", 2),
+    ]
+
+
+def _create_dataframe_calls(source: str, filename: str) -> list[int]:
+    """Lines of every ``createDataFrame`` call in ``source``."""
+    import ast
+
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(source, filename=filename))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+    ]
+
+
+def test_batch_and_routing_build_no_frame_from_python_lists():
+    """Guard: the batch path and the routing module build their
+    driver-held frames through ``session.local_frame``, never with
+    ``createDataFrame`` of a Python list (a pickled Python RDD)."""
+    import pathlib
+
+    import gcs_parquet_dataflow_spark
+
+    root = pathlib.Path(gcs_parquet_dataflow_spark.__file__).parent
+    sites = {
+        module: _create_dataframe_calls((root / module).read_text(), module)
+        for module in ("sources/batch.py", "operators/routing.py")
+    }
+    assert sites == {"sources/batch.py": [], "operators/routing.py": []}, (
+        f"createDataFrame calls: {sites} — build driver-held frames "
+        "with session.local_frame"
+    )
+    # the guard sees a violation (it cannot rot into passing vacuously)
+    synthetic = 'def f(spark):\n    return spark.createDataFrame([("a",)], "uri string")\n'
+    assert _create_dataframe_calls(synthetic, "synthetic.py") == [2]

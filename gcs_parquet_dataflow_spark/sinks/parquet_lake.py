@@ -366,8 +366,12 @@ def _list_data_files(fs, hpath) -> list[tuple[str, int]]:
         return []
     uri = hpath.toUri()
     if (uri.getScheme() or "file") == "file":
+        local = uri.getPath()
+        if os.path.isfile(local):  # as listFiles does: the file itself
+            name = os.path.basename(local)
+            return [] if name.startswith(("_", ".")) else [(local, os.path.getsize(local))]
         out = []
-        for dirpath, _dirs, files in os.walk(uri.getPath()):
+        for dirpath, _dirs, files in os.walk(local):
             for fn in files:
                 if not fn.startswith(("_", ".")):
                     full = os.path.join(dirpath, fn)
@@ -390,8 +394,12 @@ def _list_data_files(fs, hpath) -> list[tuple[str, int]]:
 def data_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) under ``path`` via the Hadoop
     FileSystem API — works on any Hadoop-compatible store (local, HDFS,
-    gs://, s3a://), not just the local disk tests run on."""
+    gs://, s3a://), not just the local disk tests run on. A path that is
+    one data file counts that file; a missing path raises
+    ``FileNotFoundError`` rather than reading as an empty table."""
     fs, hpath, _ = _fs_and_path(spark, path)
+    if not fs.exists(hpath):
+        raise FileNotFoundError(f"data_file_stats: no such path {path}")
     files = _list_data_files(fs, hpath)
     return len(files), sum(sz for _, sz in files)
 

@@ -16,13 +16,19 @@ Driver-held lists (the glob listing, the unmatched files, the empty
 result, each ledger row) become Arrow ``LocalRelation`` frames through
 ``session.local_frame``, never Python RDDs: building, collecting or
 writing them starts no Python worker, and only the write runs a job.
+
+A parquet config's schema is read from one footer on the driver
+(``footer_schema_reader``), the footer Spark's own inference would
+read, and handed to the reader: planning a batch runs no Spark job.
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 from typing import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,6 +114,63 @@ def list_files(spark: SparkSession, pattern: str) -> DataFrame:
     return local_frame(spark, [uris], URIS_SCHEMA)
 
 
+def footer_schema_reader(
+    spark: SparkSession,
+) -> Callable[[list[str]], StructType | None]:
+    """→ ``read(files)``: the schema ``spark.read.parquet(*files)`` infers,
+    read from one footer on the driver instead of in a Spark job.
+
+    With ``mergeSchema`` off Spark's inference reads exactly one footer:
+    that of the first data file in path order, skipping ``_``/``.``
+    names. ``read`` reads the same footer through the Hadoop FileSystem
+    and converts it as Spark does (``ParquetToSparkSchemaConverter``
+    over the session conf, then ``ParquetFileFormat.readSchemaFromFooter``,
+    which prefers the schema Spark writes into the footer's row
+    metadata), nullable like every inferred file schema. It returns None
+    where Spark would not read one footer (``mergeSchema`` on, no data
+    file) or the footer fails to read (a missing, empty or torn file);
+    the caller then lets Spark infer, which raises Spark's own error.
+    The JVM classes are looked up once per reader: build one per batch."""
+    jvm = spark.sparkContext._jvm
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = pq.ParquetToSparkSchemaConverter(state.conf())
+    footer_reader, file_format = pq.ParquetFooterReader, pq.ParquetFileFormat
+    footer_cls = jvm.org.apache.parquet.hadoop.Footer
+    input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+    skip_row_groups = (
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    )
+    path_cls = jvm.org.apache.hadoop.fs.Path
+    merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true"
+
+    def read(files: list[str]) -> StructType | None:
+        # Spark sorts by Java String order: UTF-16 code units
+        data = [
+            u for u in sorted(files, key=lambda u: u.encode("utf-16-be"))
+            if not _hidden(u.rstrip("/").rsplit("/", 1)[-1])
+        ]
+        if merge or not data:
+            return None
+        path = path_cls(data[0])
+        try:
+            meta = footer_reader.readFooter(
+                input_file.fromPath(path, hconf), skip_row_groups
+            )
+            schema = file_format.readSchemaFromFooter(footer_cls(path, meta), converter)
+        except Py4JJavaError:
+            return None
+        return StructType.fromJson(json.loads(schema.asNullable().json()))
+
+    return read
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file index never reads (``isDataPath``)."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".")
+
+
 @dataclass
 class RoutedBatch:
     """One config's routed slice of a batch backfill."""
@@ -137,20 +200,28 @@ def plan_batch(
     inline expression and the "join" of files to configs happens on the
     driver over the file *list* (tiny), never over row data.
 
-    The listing, its routing and the unmatched frame run no Spark job:
-    both driver-held lists are Arrow ``LocalRelation`` frames, never
-    Python RDDs. The only jobs are each config's schema read.
+    Planning runs no Spark job. The listing, its routing and the
+    unmatched frame are Arrow ``LocalRelation`` frames, never Python
+    RDDs, and each parquet config's schema comes from one footer read
+    on the driver (``footer_schema_reader``); other file types keep
+    Spark's inference.
     """
     by_config, unmatched = files_by_config(
         list_files(spark, pattern), configs, parquet_only=parquet_only
     )
     cfg_by_id = {c.config_id: c for c in configs}
     batches = []
+    read_footer = None
     for config_id, files in by_config.items():
         config = cfg_by_id[config_id]
-        df = read_with_lineage(spark, files, file_type=config.file_type)
-        schema_wo_lineage = df.drop(URI_COL).schema
-        compiled = compile_config(config, schema_wo_lineage, opts)
+        schema = None
+        if config.file_type.upper() == "PARQUET":
+            read_footer = read_footer or footer_schema_reader(spark)
+            schema = read_footer(files)
+        df = read_with_lineage(spark, files, file_type=config.file_type, schema=schema)
+        if schema is None:
+            schema = df.drop(URI_COL).schema
+        compiled = compile_config(config, schema, opts)
         batches.append(RoutedBatch(config, files, df, compiled))
     # built from the names the routing collect already holds
     return batches, local_frame(spark, [unmatched], URIS_SCHEMA)

@@ -402,9 +402,10 @@ def _landing(root):
 
 
 def test_plan_batch_and_ledger_record_job_counts(spark, tmp_path):
-    """Listing, routing and the unmatched frame run no Spark job, so
-    ``plan_batch`` runs only the 3 per-config parquet schema reads; one
-    ledger ``record`` runs exactly 1 job (its write)."""
+    """Listing, routing, the unmatched frame and the per-config schema
+    reads (one footer each, on the driver) run no Spark job, so
+    ``plan_batch`` runs none; one ledger ``record`` runs exactly 1 job
+    (its write)."""
     from gcs_parquet_dataflow_spark.sources.batch import backfill, plan_batch
 
     land = tmp_path / "land"
@@ -416,7 +417,7 @@ def test_plan_batch_and_ledger_record_job_counts(spark, tmp_path):
         spark, lambda: plan_batch(spark, configs, pattern)
     )
     assert sorted(b.config.config_id for b in batches) == ["app", "pos", "web"]
-    assert jobs == 3
+    assert jobs == 0
     assert "LocalRelation" in _optimized_plan(list_files(spark, pattern))
     assert "LocalRelation" in _optimized_plan(unmatched)
     rows, jobs = _jobs_run_by(spark, unmatched.collect)
@@ -428,6 +429,103 @@ def test_plan_batch_and_ledger_record_job_counts(spark, tmp_path):
         spark, lambda: backfill(spark, ["u1"], lambda u: None, str(tmp_path / "l"))
     )
     assert status == {"u1": "done"} and jobs == 1
+
+
+def test_footer_schema_equals_spark_inference(spark, tmp_path):
+    """The schema read from one footer on the driver is the schema
+    ``spark.read.parquet`` infers: Spark-written files (row metadata,
+    non-null fields), pyarrow ``TIMESTAMP(NANOS)`` (read as long under
+    the session's ``nanosAsLong``), decimal, binary and nested
+    struct/list/map columns, and, for files that differ, the first
+    file in path order."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gcs_parquet_dataflow_spark.sources.batch import (
+        URI_COL,
+        footer_schema_reader,
+        plan_batch,
+    )
+
+    read = footer_schema_reader(spark)
+
+    def inferred(files):
+        return spark.read.parquet(*files).schema
+
+    spark.sql(
+        "SELECT 1L AS id, CAST('1.50' AS DECIMAL(10,2)) AS d, "
+        "named_struct('a', 1, 'b', array(1, 2)) AS s, map('k', 1.0D) AS m, "
+        "CAST('abc' AS BINARY) AS bin, TIMESTAMP'2024-01-02 03:04:05' AS ts"
+    ).coalesce(1).write.parquet(str(tmp_path / "spark"))
+    spark_files = [
+        f"file:{p}" for p in sorted((tmp_path / "spark").glob("part-*.parquet"))
+    ]
+    meta = pq.read_schema(spark_files[0][len("file:"):]).metadata
+    assert b"org.apache.spark.sql.parquet.row.metadata" in meta
+    assert read(spark_files) == inferred(spark_files)
+    # the row metadata says non-null; inference, like the reader, says nullable
+    assert read(spark_files)["id"].nullable
+
+    pq.write_table(pa.table({
+        "ts_ns": pa.array([1, None], pa.timestamp("ns")),
+        "ts_us": pa.array([datetime.datetime(2024, 1, 2), None],
+                          pa.timestamp("us", tz="UTC")),
+        "ts_ms": pa.array([1, 2], pa.timestamp("ms")),
+        "dec": pa.array([decimal.Decimal("1.23"), None], pa.decimal128(12, 2)),
+        "bin": pa.array([b"x", None], pa.binary()),
+        "st": pa.array([{"x": 1, "y": [1, 2]}, None]),
+        "lst": pa.array([[1.5], []]),
+        "mp": pa.array([[("a", 1)], None], pa.map_(pa.string(), pa.int32())),
+    }), str(tmp_path / "arrow.parquet"))
+    arrow_files = [f"file:{tmp_path}/arrow.parquet"]
+    assert read(arrow_files) == inferred(arrow_files)
+    assert read(arrow_files)["ts_ns"].dataType.simpleString() == "bigint"
+
+    # files that differ: the first in path order wins, whatever the order
+    # they are listed in; ``_``/``.`` names are never read
+    (tmp_path / "mixed").mkdir()
+    pq.write_table(pa.table({"b_col": [1]}), str(tmp_path / "mixed/b.parquet"))
+    pq.write_table(pa.table({"a_col": ["x"]}), str(tmp_path / "mixed/a.parquet"))
+    pq.write_table(pa.table({"h": [1.0]}), str(tmp_path / "mixed/_h.parquet"))
+    mixed = [f"file:{tmp_path}/mixed/{n}" for n in ("b.parquet", "_h.parquet", "a.parquet")]
+    assert read(mixed) == inferred(mixed)
+    assert read(mixed).fieldNames() == ["a_col"]
+
+    # plan_batch reads with that schema: the frame's schema is Spark's
+    configs = load_configs([{
+        "config_id": "mixed", "source_gcs_prefix": f"file:{tmp_path}/mixed/",
+        "mixpanel_event_name_from_field": "a_col", "field_mappings": [],
+    }])
+    (batch,), _ = plan_batch(spark, configs, f"file:{tmp_path}/mixed/*.parquet")
+    assert batch.df.drop(URI_COL).schema == inferred(batch.files)
+    rows = batch.df.orderBy("a_col").collect()  # b.parquet has no a_col
+    assert [r["a_col"] for r in rows] == [None, "x"]
+
+
+def test_footer_schema_falls_back_to_spark_inference(spark, tmp_path):
+    """Where Spark would not read one good footer, the reader returns
+    None and Spark's inference raises its own error."""
+    from gcs_parquet_dataflow_spark.sources.batch import (
+        footer_schema_reader,
+        plan_batch,
+    )
+
+    read = footer_schema_reader(spark)
+    (tmp_path / "empty.parquet").write_bytes(b"")
+    (tmp_path / "torn.parquet").write_bytes(b"not a parquet file")
+    for name in ("empty.parquet", "torn.parquet", "absent.parquet", "_only.parquet"):
+        assert read([f"file:{tmp_path}/{name}"]) is None, name
+    assert read([]) is None
+
+    configs = load_configs([{
+        "config_id": "torn", "source_gcs_prefix": f"file:{tmp_path}/",
+        "mixpanel_event_name_from_field": "e", "field_mappings": [],
+    }])
+    with pytest.raises(Exception, match="torn.parquet"):
+        plan_batch(spark, configs, f"file:{tmp_path}/torn.parquet")
 
 
 def test_local_frame_round_trips_driver_values(spark, tmp_path):

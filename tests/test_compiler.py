@@ -599,3 +599,19 @@ def test_integer_inf_fires_before_later_required_check(spark):
     compiled = compile_config(cfg, schema, OPTS())
     [row] = compiled.apply(df).collect()
     assert row["_error"]["error_type"] == "critical_transformation_error"
+
+
+def test_unresolved_column_still_names_the_column(spark):
+    """With PySpark's call-site capture off (``get_spark``), a compiled
+    config applied to rows that lack a mapped field still fails analysis
+    with an ``AnalysisException`` naming that field."""
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    compiled = compile_config(CONFIG, SCHEMA, OPTS())
+    missing = T.StructType([f for f in SCHEMA.fields if f.name != "did"])
+    df = spark.createDataFrame([ROW_OK[:3] + ROW_OK[4:]], missing)
+    with pytest.raises(AnalysisException) as err:
+        compiled.serialize(df).collect()
+    assert err.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
+    assert "`did`" in str(err.value)

@@ -89,6 +89,24 @@ def test_write_sorted_produces_disjoint_file_ranges(spark, tmp_path):
     assert back.count() == 50_000
 
 
+def test_data_file_stats_raises_on_missing_path_and_stats_single_file(
+    spark, tmp_path
+):
+    """A missing path is an error, not an empty table; a path that is one
+    data file counts that file, on the local branch as on Hadoop's."""
+    from gcs_parquet_dataflow_spark.sinks.parquet_lake import data_file_stats
+
+    with pytest.raises(FileNotFoundError, match="absent"):
+        data_file_stats(spark, str(tmp_path / "absent"))
+    path = str(tmp_path / "t")
+    spark.range(10).coalesce(1).write.parquet(path)
+    [part] = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    size = os.path.getsize(os.path.join(path, part))
+    assert data_file_stats(spark, path) == (1, size)
+    assert data_file_stats(spark, os.path.join(path, part)) == (1, size)
+    assert data_file_stats(spark, f"file:{path}/{part}") == (1, size)
+
+
 def test_compact_reduces_file_count_preserving_rows(spark, tmp_path):
     from gcs_parquet_dataflow_spark.sinks.parquet_lake import (
         compact,
